@@ -16,13 +16,14 @@ Operator ids (F*/A*/W*/U*/J*/X*/D*/S*/K*) reference SURVEY.md §2.
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from geoharvest_spark import index as ix  # noqa: E402
 from geoharvest_spark import geo as _geo  # noqa: E402
@@ -502,14 +503,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         polys = _nation_boxes(spark, sf)
         # nation boxes tile the WHOLE world: the cover-cell prefilter can
         # prune nothing and is pure fixed overhead here (r8: measured
-        # +0.2-0.5 s) — disabled for this query only. The Arrow refine is
-        # pinned explicitly (it is also the library default): 25 distinct
-        # 5-point rectangles batch perfectly in the Arrow kernel while
-        # the 10-term codegen unroll pays 2x padding per row (interleaved
-        # min-of-3: 3.3 vs 2.5 s at sf1.0; both paths bit-identical).
+        # +0.2-0.5 s) — disabled for this query only.
         out = pip_join(
-            pts, polys, res=4, rows_per_task=5000, cell_prefilter=False,
-            codegen_refine=False,
+            pts, polys, res=4, rows_per_task=5000, cell_prefilter=False
         )
         return (
             out.groupBy("poly_id")

@@ -155,13 +155,21 @@ def _count_occurrences(col: Column, ch: str) -> Column:
 
 def trained_consistent(merges: Iterable[tuple[str, str]]) -> bool:
     """True iff every merge's parts are buildable by strictly earlier
-    merges (single chars are always buildable) — the training invariant
-    under which the replace-chain and the classic lowest-rank-first
-    loop provably agree (r6). O(#merges), driver-side."""
+    merges (single chars are always buildable) and no pair repeats — the
+    training invariant under which the replace-chain and the classic
+    lowest-rank-first loop provably agree (r6). A repeated pair would
+    keep only its last rank in the pair-keyed rank dict, so such a table
+    takes the replace chain. O(#merges), driver-side."""
     made: set[str] = set()
+    seen: set[tuple[str, str]] = set()
     for a, b in merges:
-        if (len(a) > 1 and a not in made) or (len(b) > 1 and b not in made):
+        if (
+            (a, b) in seen
+            or (len(a) > 1 and a not in made)
+            or (len(b) > 1 and b not in made)
+        ):
             return False
+        seen.add((a, b))
         made.add(a + b)
     return True
 

@@ -216,8 +216,9 @@ def dbscan(
     comp_c = connected_components(
         cedges, vertices=lbl.select("l"), max_iter=max_iter
     )
-    # back-substitute: cluster(u) = component(l(u)); isolated cores
-    # (no core neighbor) have l(u) = u and component u from `vertices`
+    # back-substitute: cluster(u) = component(l(u)); isolated cores (no
+    # core neighbor) have no lbl row, so both left joins leave l and
+    # component null and coalesce(component, id) gives cluster(u) = u
     comp = (
         core.join(lbl, "id", "left")
         .join(

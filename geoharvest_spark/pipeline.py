@@ -164,10 +164,10 @@ def harvest_rows_list(
 ) -> list[dict]:
     """The fused harvest kernel over plain Python sequences -> row dicts.
 
-    Shared by the Spark operators (harvest_pages_fused per pandas batch,
-    harvest_pages_fused_arrow per Arrow batch) and the driver-side oracle
-    staging path — so the DuckDB correctness gate compares distributed
-    execution against a single-process run of the SAME kernel, catching
+    Shared by the Spark operator (harvest_pages_fused, once per Arrow
+    batch) and the driver-side oracle staging path (harvest_rows_pdf) —
+    so the DuckDB correctness gate compares distributed execution against
+    a single-process run of the SAME kernel, catching
     partitioning/serialization divergence.
     """
     from .normalize import DEFAULT_MD_MODIFIED, normalize_record
@@ -216,23 +216,6 @@ def harvest_rows_pdf(
     )
 
 
-def harvest_pages_fused_pandas(
-    pages: DataFrame, md_modified: str | None = None
-) -> DataFrame:
-    """The mapInPandas variant of the fused harvest (kept as the equality
-    twin for harvest_pages_fused; measured 0.84-0.94x slower than the
-    mapInArrow path on the bench corpus — html blobs get materialized
-    into a pandas object array on input and the struct rows re-walked
-    from a pandas object column on output)."""
-    from .schema import NORMALIZED_SCHEMA
-
-    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield harvest_rows_pdf(pdf["url"], pdf["html"], md_modified)
-
-    return pages.select("url", "html").mapInPandas(_map, NORMALIZED_SCHEMA)
-
-
 def harvest_pages_fused(
     pages: DataFrame, md_modified: str | None = None
 ) -> DataFrame:
@@ -251,7 +234,7 @@ def harvest_pages_fused(
     materialization on BOTH sides of the crossing (input html blobs
     never become a pandas object array; output structs never become
     per-row Python dicts inside a pandas column that Arrow then
-    re-walks). Measured 1.07-1.19x over the mapInPandas twin on the
+    re-walks). Measured 1.07-1.19x over a mapInPandas variant on the
     bench corpus (alternating min-of-5, 32 cores)."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema

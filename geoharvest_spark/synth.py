@@ -11,6 +11,8 @@ Generates the FIXTURES.md tables at any scale from a fixed seed:
 - ``polygons`` (T4): pseudo-random polygons + a few continent-scale ones to
   force hot-cell skew.
 - ``query_points`` (T5): kNN probes.
+- ``synth_docs``: a JVM-side word-salad document corpus (doc_id, text) for
+  the web-text operators.
 
 The golden ``text`` column IS the output of extract.extract_text_bytes on
 the generated html, making the byte-identical invariant testable end to end.
@@ -26,6 +28,7 @@ import json
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import functions as F
 
 from .extract import extract_text_bytes
 
@@ -536,3 +539,39 @@ def stable_hash(s: str) -> int:
     """Deterministic 63-bit hash (md5-based; NOT Python hash(), which is
     salted per-process and would break resume determinism)."""
     return int.from_bytes(hashlib.md5(s.encode()).digest()[:8], "big") >> 1
+
+
+_VOCAB = [
+    "key", "agg", "row", "scan", "slow", "fast", "table", "value", "part",
+    "hash", "merge", "batch", "spark", "line", "sort", "window", "query",
+    "join", "small", "big", "customer", "order", "data", "column", "stream",
+    "group", "filter", "the", "a", "of", "to", "in", "is", "and", "for",
+    "with", "from", "page", "web", "text", "corpus", "token", "model",
+    "train", "split", "dedup", "chunk", "gram", "vocab", "bench",
+]
+
+
+def doc_text_expr(doc_id_col, n_tokens: int = 100):
+    """Deterministic word-salad text for a doc id column: token j is
+    vocab[xxhash64(id, j) % V]."""
+    vocab = F.array(*[F.lit(w) for w in _VOCAB])
+    toks = F.transform(
+        F.sequence(F.lit(0), F.lit(n_tokens - 1)),
+        lambda j: F.element_at(
+            vocab,
+            (
+                F.pmod(F.xxhash64(doc_id_col, j), F.lit(len(_VOCAB))) + 1
+            ).cast("int"),
+        ),
+    )
+    return F.concat_ws(" ", toks)
+
+
+def synth_docs(spark, n: int, n_tokens: int = 100):
+    """Deterministic word-salad corpus: token j of doc i is vocab[
+    xxhash64(i, j) % V]. Uncorrelated across docs (cross-doc chunk
+    collisions only via the short tail), like the bench documents table."""
+    df = spark.range(0, n, 1, 128).withColumnRenamed("id", "doc_id")
+    return df.select(
+        "doc_id", doc_text_expr(F.col("doc_id"), n_tokens).alias("text")
+    )

@@ -26,10 +26,11 @@ Workload (CPU-heavy, shuffle-real):
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -181,7 +182,7 @@ def main() -> None:
     # the synth; chunk_dedup holds no internal cache, so identical reps
     # recompute honestly
     from geoharvest_spark.textops import chunk_dedup
-    from jobs.headroom import synth_docs
+    from geoharvest_spark.synth import synth_docs
 
     docs = synth_docs(spark, 100_000).repartition(N_PART).cache()
     rows["docs"] = docs.count()

@@ -37,7 +37,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from geoharvest_spark.curation import curate  # noqa: E402
 from geoharvest_spark.session import get_spark  # noqa: E402
-from jobs.headroom import doc_text_expr, synth_docs  # noqa: E402
+from geoharvest_spark.synth import doc_text_expr, synth_docs  # noqa: E402
 
 
 def synth_pages(spark, n: int):

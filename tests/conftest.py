@@ -1,8 +1,15 @@
 from __future__ import annotations
 
+import os
+import sys
+
 import pytest
 
-from geoharvest_spark.session import get_spark
+# the repo root, so the suite imports this checkout's geoharvest_spark,
+# jobs and __spark_entry__ however pytest is launched
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from geoharvest_spark.session import get_spark  # noqa: E402
 
 
 @pytest.fixture(scope="session")

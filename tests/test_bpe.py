@@ -293,13 +293,16 @@ def test_bpe_dispatch_consistent_vs_not(spark):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "ArrowEvalPython" in plan_good
-    bad = [("ab", "c")]  # "ab" never built by an earlier merge
-    assert not bpe.trained_consistent(bad)
-    plan_bad = (
-        bpe.with_bpe_token_count(df, bad)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "EvalPython" not in plan_bad
+    for bad in (
+        [("ab", "c")],  # "ab" never built by an earlier merge
+        [("a", "b"), ("b", "a"), ("a", "b")],  # repeated pair: two ranks
+    ):
+        assert not bpe.trained_consistent(bad)
+        plan_bad = (
+            bpe.with_bpe_token_count(df, bad)
+            ._jdf.queryExecution().executedPlan().toString()
+        )
+        assert "EvalPython" not in plan_bad
     # NULL contract + value agreement between the two paths
     import pandas as pd
 

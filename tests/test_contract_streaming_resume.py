@@ -4,12 +4,8 @@ streaming operator (stream_last_event) and crash-resume idempotency
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 from pyspark.sql import functions as F
-
-sys.path.insert(0, "/root/repo")
 
 from tests.conftest import SF001
 

@@ -13,9 +13,6 @@ N = 2_000
 
 @pytest.fixture(scope="module")
 def pages(spark):
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from jobs.webtext_pipeline import synth_pages
 
     return synth_pages(spark, N).cache()
@@ -23,10 +20,7 @@ def pages(spark):
 
 @pytest.fixture(scope="module")
 def bench(spark):
-    import sys
-
-    sys.path.insert(0, "/root/repo")
-    from jobs.headroom import synth_docs
+    from geoharvest_spark.synth import synth_docs
 
     return (
         synth_docs(spark, 500)
@@ -209,7 +203,7 @@ def test_lm_filter_requires_model(spark, pages, bench, tmp_path):
 def test_authority_stage_gates_unlinked_hosts(spark, bench, tmp_path):
     # every lonely.com page links the hub host; authority_min just above
     # the teleport base keeps only docs on the actually-linked host
-    from jobs.headroom import doc_text_expr
+    from geoharvest_spark.synth import doc_text_expr
 
     n = 300
     i = F.col("doc_id")

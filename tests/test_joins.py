@@ -3,6 +3,8 @@ brute-force haversine oracle (FIXTURES.md T4/T5 golden row-sets)."""
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -56,18 +58,53 @@ def _pip_oracle(points_pdf: pd.DataFrame, polys_pdf: pd.DataFrame) -> set:
     return out
 
 
+_RING15 = [
+    (round(121.5 + r * np.cos(j * np.pi / 7.5), 6),
+     round(31.2 + r * np.sin(j * np.pi / 7.5), 6))
+    for j, r in enumerate([2.0, 4.0] * 7 + [3.0])
+]
+# shapes the synth's single 5-10 point rings never produce, each in a hot
+# region of points_df (parse_polygon_wkt reads exterior rings only, so the
+# hole counts as inside in both the join and the oracle)
+_EXTRA_WKT = {
+    "xmulti2": "MULTIPOLYGON (((-74 40, -71 40, -71 43, -74 43, -74 40)), "
+    "((-70 41, -67 41, -68.5 45, -70 41)))",
+    "xholed": "POLYGON ((6 45, 11 45, 11 50, 6 50, 6 45), "
+    "(7.5 46.5, 9.5 46.5, 9.5 48.5, 7.5 48.5, 7.5 46.5))",
+    "xring15": "POLYGON (("
+    + ", ".join(f"{x} {y}" for x, y in _RING15 + _RING15[:1])
+    + "))",
+}
+
+
+def _extra_polygons_pdf() -> pd.DataFrame:
+    rows = []
+    for pid, wkt in _EXTRA_WKT.items():
+        xy = np.array(re.findall(r"(-?[\d.]+) (-?[\d.]+)", wkt), dtype=float)
+        (w, s), (e, n) = xy.min(axis=0), xy.max(axis=0)
+        bbox = {"w": float(w), "e": float(e), "n": float(n), "s": float(s)}
+        rows.append({"poly_id": pid, "wkt": wkt, "bbox": bbox})
+    return pd.DataFrame(rows)
+
+
 def test_pip_join_matches_oracle(spark, points_df):
+    from geoharvest_spark.schema import POLYGONS_SCHEMA
+
     pts, pdf = points_df
-    polys = polygons_df(spark, 200)
+    polys_pdf = pd.concat(
+        [polygons_pdf(200), _extra_polygons_pdf()], ignore_index=True
+    )
+    polys = spark.createDataFrame(polys_pdf, schema=POLYGONS_SCHEMA)
     got = {
         (r.point_id, r.poly_id)
         for r in pip_join(pts, polys, res=5, rows_per_task=500).select(
             "point_id", "poly_id"
         ).collect()
     }
-    expected = _pip_oracle(pdf, polygons_pdf(200))
+    expected = _pip_oracle(pdf, polys_pdf)
     assert got == expected
     assert len(expected) > 100  # non-trivial overlap
+    assert {p for _, p in expected} >= set(_EXTRA_WKT)
 
 
 def test_pip_join_unsalted_equals_salted(spark, points_df):
@@ -318,52 +355,6 @@ def test_interval_overlap_join_exactly_once(spark):
             for r in interval_overlap_join(la2, rb2, bucket=bucket).collect()
         )
         assert got == want, bucket
-
-
-def test_pip_codegen_refine_equals_arrow(spark, points_df):
-    """r8: the unrolled codegen ray cast must be bit-identical to the
-    Arrow kernel (same IEEE operand order), and the auto gate must pick
-    it for simple rings. Polygons >10 ring points fall back to Arrow."""
-    from geoharvest_spark.joins import _pip_all_simple
-
-    pts, _ = points_df
-    polys = polygons_df(spark, 120)
-    assert _pip_all_simple(polys)  # synth rings are <= 10 points
-    a = {
-        (r.point_id, r.poly_id)
-        for r in pip_join(pts, polys, res=5, codegen_refine=True)
-        .select("point_id", "poly_id").collect()
-    }
-    b = {
-        (r.point_id, r.poly_id)
-        for r in pip_join(pts, polys, res=5, codegen_refine=False)
-        .select("point_id", "poly_id").collect()
-    }
-    assert a == b and len(a) > 50
-    # the codegen plan must carry no Python boundary at all
-    plan = (
-        pip_join(pts, polys, res=5, codegen_refine=True)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-    spark.catalog.clearCache()
-
-
-def test_pip_all_simple_gates_complex_wkt(spark):
-    from geoharvest_spark.joins import _pip_all_simple
-
-    multi = spark.createDataFrame(
-        [("p0", "MULTIPOLYGON (((0 0, 1 0, 1 1, 0 0)), ((2 2, 3 2, 3 3, 2 2)))")],
-        "poly_id string, wkt string",
-    )
-    assert not _pip_all_simple(multi)
-    big_ring = "POLYGON ((" + ", ".join(
-        f"{i} {i % 3}" for i in range(15)
-    ) + ", 0 0))"
-    big = spark.createDataFrame(
-        [("p1", big_ring)], "poly_id string, wkt string"
-    )
-    assert not _pip_all_simple(big)
 
 
 def test_interval_overlap_exact_buckets_negative_and_huge(spark):

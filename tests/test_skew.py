@@ -89,9 +89,6 @@ def test_contract_skew_census_bounds_max_task(spark):
     must stay within ~2x rows_per_task — the property that bounds the max
     task at 100 TB (xxhash64 imbalance stays far below 2x at these
     counts)."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as E
     from tests.conftest import SF001
 
@@ -117,9 +114,6 @@ def test_contract_skew_census_bounds_max_task(spark):
 def test_contract_skew_join_parity_vs_unsalted(spark):
     """The contract query's full operator output equals the unsalted run
     on the same pathological input (salting never changes results)."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as E
     from tests.conftest import SF001
 
